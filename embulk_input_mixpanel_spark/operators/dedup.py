@@ -258,10 +258,11 @@ def _token_array(text_col: str | Column) -> Column:
 
 
 def _rebalance(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before explosion-heavy work.
+    """Widen narrow inputs before explosion- or fold-heavy work.
 
     A small corpus file often arrives as 1-2 scan partitions; the shingle
-    or token explosion then runs on a fraction of the cluster. One cheap
+    or token explosion (or the per-row dot-product folds of
+    operators/similarity.py) then runs on a fraction of the cluster. One cheap
     round-robin shuffle of the (small) input unlocks full parallelism for
     the expensive downstream expansion. No-op when the scan is already at
     least as wide as the default parallelism (the 100 TB case).

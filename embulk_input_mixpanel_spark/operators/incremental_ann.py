@@ -14,7 +14,8 @@ that lake bucket's parquet files, so a top-k probe reads
 file-level pruning the IVF paper promises, realized through snapshot
 file lists instead of a custom storage engine.
 
-Three lake tables:
+Lake tables (the shared commit chain, takedown registry, purge and
+maintain are operators/store_kernel.py's):
 - ``cent``    (centroid_id int, cv array<double>) — the tiny broadcast
   dim, trained once from the FIRST non-empty batch (the ``n_centroids``
   lowest-id vectors, matching similarity.ivf_assign's deterministic
@@ -23,33 +24,25 @@ Three lake tables:
   Carries ``epoch`` (bumped per (re)train) — the consistency token
   between centroids and stored assignments.
 - ``vectors`` (id long, v array<double>, cluster int, cos_r double,
-  batch_seq long), bucket = cluster. Carries ``cent_epoch``: the epoch
-  its cluster assignments were computed against.
+  batch_seq long), bucket = cluster — the chain's leader. Carries
+  ``cent_epoch``: the epoch its cluster assignments were computed
+  against.
 - ``ids``     (id long, batch_seq long), bucket = id — the idempotence
-  index. Redelivery filtering anti-joins the batch against ONLY the lake
-  buckets its own ids hash into, so the known-id scan is O(batch) files
-  at any corpus size (the structure ``vectors`` itself cannot provide:
-  it is bucketed by cluster, which a new vector's id says nothing
-  about). Mirrors IncrementalDeduper's sigs-table pruning.
-- ``deleted`` (id long, batch_seq long), bucket = id — the takedown
-  registry: :meth:`delete` appends ids O(batch); probes mask them
-  immediately; :meth:`purge_deleted` / :meth:`retrain` drop the vector
-  rows physically. Rows are kept forever (no-reingest memory).
+  index, a follower of ``vectors`` (a pure projection of its rows, so
+  the kernel's roll-forward rebuilds any lag, including a store created
+  before the index existed). Redelivery filtering anti-joins the batch
+  against ONLY the lake buckets its own ids hash into, so the known-id
+  scan is O(batch) files at any corpus size (the structure ``vectors``
+  itself cannot provide: it is bucketed by cluster, which a new vector's
+  id says nothing about).
 
-Crash consistency (:meth:`recover`, called at the top of
-:meth:`add_batch` and :meth:`maintain`):
-- ``vectors`` commits before ``ids`` with the same ``batch_seq``; a
-  crash in between is rolled FORWARD by rebuilding the dangling batch's
-  id rows from ``vectors.read().filter(batch_seq == seq)`` — a
-  column-pruned scan whose batch_seq predicate prunes via parquet
-  row-group stats (appends write per-batch files), and which stays
-  correct even if a compaction ran in between (file-diff recovery would
-  not — the lesson from the deduper's recover()).
-- :meth:`retrain` commits ``cent`` (epoch e+1) before the vectors
-  rewrite; a crash or optimistic-concurrency abort in between leaves
-  ``vectors.cent_epoch < cent.epoch``, which recover() heals by
-  re-assigning the stored corpus against the current centroids — a pure
-  function of durable state, so the roll-forward is idempotent.
+Epoch consistency (:meth:`recover`, called at the top of
+:meth:`add_batch` and :meth:`maintain`): :meth:`retrain` commits
+``cent`` (epoch e+1) before the vectors rewrite; a crash or
+optimistic-concurrency abort in between leaves
+``vectors.cent_epoch < cent.epoch``, which recover() heals by
+re-assigning the stored corpus against the current centroids — a pure
+function of durable state, so the roll-forward is idempotent.
 
 Idempotence: redelivered ids are dropped by the bucket-pruned anti-join
 above. Concurrent writers are rejected by the tables' optimistic version
@@ -67,8 +60,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.lake import ConcurrentCommitError, LakeTable, lake_buckets_of
-from .similarity import _cosine_n, _norm, _rebalance, _to_double
+from ..sources.lake import ConcurrentCommitError, LakeTable
+from .dedup import _rebalance
+from .similarity import _cosine_n, _norm, _to_double
+from .store_kernel import ID_SEQ_SCHEMA, Link, StoreKernel
 
 __all__ = ["IncrementalANN"]
 
@@ -90,23 +85,8 @@ _VEC_SCHEMA = T.StructType(
     ]
 )
 
-_ID_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("batch_seq", T.LongType()),
-    ]
-)
-
-# takedown registry (same shape as the deduper's): ids whose vectors are
-# deleted. Rows kept forever (no-reingest memory; the ids table already
-# blocks re-ingest of previously-stored ids, but a PRE-emptive delete of a
-# not-yet-delivered id must block too); purged_seq tracks physical purging.
-_DELETED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("batch_seq", T.LongType()),
-    ]
-)
+# the id index has the takedown registry's (id, batch_seq) shape
+_ID_SCHEMA = ID_SEQ_SCHEMA
 
 
 def _argmax_centroid(scored: DataFrame) -> DataFrame:
@@ -127,8 +107,11 @@ def _argmax_centroid(scored: DataFrame) -> DataFrame:
     )
 
 
-class IncrementalANN:
+class IncrementalANN(StoreKernel):
     """Persistent IVF index + per-batch ingest + bucket-pruned probes."""
+
+    ID_COL = "vec_id"
+    PURGE_STATS = ("vector_buckets_rewritten",)
 
     def __init__(
         self,
@@ -144,61 +127,37 @@ class IncrementalANN:
         caller."""
         self.spark = spark
         self.path = os.path.abspath(path)
-        cent_path = os.path.join(self.path, "cent")
-        vec_path = os.path.join(self.path, "vectors")
-        ids_path = os.path.join(self.path, "ids")
-        del_path = os.path.join(self.path, "deleted")
-        self.cent = LakeTable(spark, cent_path)
-        self.vectors = LakeTable(spark, vec_path)
-        self.ids = LakeTable(spark, ids_path)
-        self.deleted = LakeTable(spark, del_path)
-        if not self.cent.exists():
-            self.n_centroids = 8 if n_centroids is None else int(n_centroids)
-            self.cent = LakeTable.create(
-                spark, cent_path, _CENT_SCHEMA, num_buckets=1,
-                properties={"trained": False, "n_centroids": self.n_centroids,
-                            "epoch": 0},
+        self.cent = self._open(
+            "cent", _CENT_SCHEMA, 1, trained=False,
+            n_centroids=8 if n_centroids is None else int(n_centroids), epoch=0,
+        )
+        stored = int(self.cent.properties.get("n_centroids", n_centroids or 8))
+        if n_centroids is not None and stored != int(n_centroids):
+            raise ValueError(
+                f"store at {self.path} currently has n_centroids={stored}; "
+                f"reopening with n_centroids={n_centroids} would probe a "
+                "bucket layout the stored assignments don't follow — grow "
+                "the fanout with retrain(n_centroids=...) instead"
             )
-        else:
-            stored = int(self.cent.properties.get("n_centroids", n_centroids or 8))
-            if n_centroids is not None and stored != int(n_centroids):
-                raise ValueError(
-                    f"store at {self.path} currently has n_centroids={stored}; "
-                    f"reopening with n_centroids={n_centroids} would probe a "
-                    "bucket layout the stored assignments don't follow — grow "
-                    "the fanout with retrain(n_centroids=...) instead"
-                )
-            self.n_centroids = stored
-        if not self.vectors.exists():
-            # bucket == cluster: the bucketing IS the inverted file
-            self.vectors = LakeTable.create(
-                spark, vec_path, _VEC_SCHEMA, num_buckets=self.n_centroids,
-                properties={"batch_seq": 0, "cent_epoch": 0},
-            )
-        if not self.ids.exists():
-            self.ids = LakeTable.create(
-                spark, ids_path, _ID_SCHEMA, num_buckets=id_buckets,
-                properties={"batch_seq": 0},
-            )
-            # pre-id-index store (older layout): backfill so idempotence
-            # filtering stays correct for already-ingested batches
-            vec_seq = int(self.vectors.properties.get("batch_seq", 0))
-            if vec_seq > 0:
-                rows = self.vectors.read().select("id", "batch_seq")
-                self.ids.commit_append(
-                    rows.withColumn("bucket", self.ids.bucket_expr("id")),
-                    properties={"batch_seq": vec_seq},
-                )
-        if not self.deleted.exists():
-            # same num_buckets as ids so the batch's id-bucket list prunes
-            # both the known-id and the takedown reads with one job
-            self.deleted = LakeTable.create(
-                spark, del_path, _DELETED_SCHEMA,
-                num_buckets=self.ids.num_buckets,
-                properties={"batch_seq": 0, "purged_seq": 0},
-            )
+        self.n_centroids = stored
+        # bucket == cluster: the bucketing IS the inverted file
+        self.vectors = self._open(
+            "vectors", _VEC_SCHEMA, self.n_centroids, batch_seq=0, cent_epoch=0
+        )
+        self.ids = self._open("ids", _ID_SCHEMA, id_buckets, batch_seq=0)
+        self._open_registry()
 
     # ------------------------------------------------------------ internals
+
+    def _chain(self) -> list[Link]:
+        return [
+            ("", self.vectors, None),
+            ("ids_", self.ids, lambda rows: rows.select("id", "batch_seq").withColumn(
+                "bucket", self.ids.bucket_expr("id"))),
+        ]
+
+    def _id_table(self) -> LakeTable:
+        return self.ids
 
     def _centroids(self) -> DataFrame:
         return self.cent.read().select("centroid_id", F.col("cv").alias("_cv"))
@@ -269,11 +228,7 @@ class IncrementalANN:
         vec_v = self.vectors.version
         # anti-join the takedown registry: the full rewrite doubles as a
         # physical purge of deleted vectors
-        corpus = (
-            self.vectors.read()
-            .join(self.deleted.read().select("id"), "id", "left_anti")
-            .select("id", "v", "batch_seq")
-        )
+        corpus = self._live(self.vectors.read()).select("id", "v", "batch_seq")
         newassign = self._score_against_centroids(corpus.select("id", "v")).join(
             corpus.select("id", "batch_seq"), "id"
         )
@@ -292,38 +247,12 @@ class IncrementalANN:
     def recover(self) -> bool:
         """Roll forward any interrupted multi-table commit sequence.
 
-        Two healable states (see module doc): a dangling vectors batch
-        whose id-index rows never committed, and a centroid epoch ahead
-        of the stored assignments (crashed/aborted retrain). Both
+        Two healable states: a dangling vectors batch whose id-index rows
+        never committed (the kernel's roll-forward), and a centroid epoch
+        ahead of the stored assignments (crashed/aborted retrain). Both
         roll-forwards are pure functions of durable state. Returns True
         if any recovery ran."""
-        ran = False
-        vec_seq = int(self.vectors.properties.get("batch_seq", 0))
-        id_seq = int(self.ids.properties.get("batch_seq", 0))
-        if vec_seq != id_seq:
-            if vec_seq < id_seq:
-                raise RuntimeError(
-                    f"ANN store corrupt: vectors at batch {vec_seq}, id index at "
-                    f"{id_seq} — the id index can never run ahead of vectors"
-                )
-            # tolerate ANY lag, not just the single-batch crash window:
-            # lag 1 is the normal die-between-commits case; lag > 1 is a
-            # pre-id-index store whose creation-time backfill crashed
-            # between LakeTable.create and the backfill append (ids stuck
-            # at batch_seq=0 forever). Both heal the same way — the id
-            # rows are a pure projection of the durable vectors rows, so
-            # rebuild everything the index is missing. filter-by-
-            # batch_seq, NOT a snapshot file-diff: stays correct even if
-            # a compaction committed after the crash.
-            dangling = self.vectors.read().filter(
-                F.col("batch_seq") > F.lit(id_seq)
-            ).select("id", "batch_seq")
-            self.ids.commit_append(
-                dangling.withColumn("bucket", self.ids.bucket_expr("id")),
-                properties={"batch_seq": vec_seq},
-                expected_version=self.ids.version,
-            )
-            ran = True
+        ran = super().recover()
         nc = int(self.cent.properties.get("n_centroids", self.n_centroids))
         if int(self.vectors.properties.get("cent_epoch", 0)) != int(
             self.cent.properties.get("epoch", 0)
@@ -352,22 +281,16 @@ class IncrementalANN:
         one append commit per table (new files only)."""
         ran_recovery = self.recover()
         batch_seq = int(self.vectors.properties.get("batch_seq", 0)) + 1
-        vec_v = self.vectors.version
+        pins = self._pins()
 
         vecs = _rebalance(batch).select(
             F.col(id_col).cast("long").alias("id"), _to_double(vec_col).alias("v")
         )
-        # idempotence: drop redelivered ids via the id-bucketed index —
-        # the scan opens only the lake buckets the BATCH's ids hash into,
-        # never the whole corpus' id files
-        batch_id_buckets = lake_buckets_of(vecs, self.ids, "id")
+        # idempotence: drop redelivered (or DELETED) ids via the id-bucketed
+        # index — the scan opens only the lake buckets the BATCH's ids hash
+        # into, never the whole corpus' id files
         ids_snap = self.ids.snapshot()
-        # known = stored ids UNION deleted ids (same num_buckets, so one
-        # pruned bucket list serves both): a redelivered DELETED vector —
-        # or one deleted ahead of delivery — never enters the store
-        known = self.ids.read(buckets=batch_id_buckets).select("id").unionByName(
-            self.deleted.read(buckets=batch_id_buckets).select("id")
-        )
+        known, batch_id_buckets = self._known_ids(vecs)
         vecs = vecs.join(known, "id", "left_anti").localCheckpoint(eager=True)
         n = vecs.count()
         if stats is not None:
@@ -416,84 +339,20 @@ class IncrementalANN:
         # owes the older rows. First batch of an empty table stamps freely.
         prev_epoch = int(self.vectors.properties.get("cent_epoch", 0))
         stamp = epoch if batch_seq == 1 else min(prev_epoch, epoch)
-        self.vectors.commit_append(
-            out,
-            properties={"batch_seq": batch_seq, "cent_epoch": stamp},
-            expected_version=vec_v,
-        )
-        self.ids.commit_append(
-            vecs.select("id", F.lit(batch_seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.ids.bucket_expr("id")),
-            properties={"batch_seq": batch_seq},
-            expected_version=self.ids.version,
-        )
+        self._append_batch(out, batch_seq, pins, cent_epoch=stamp)
         if stats is not None:
             stats.update(n_new=n, batch_seq=batch_seq)
         return n
 
     # ------------------------------------------------------------- takedown
 
-    def delete(self, ids, id_col: str = "vec_id") -> int:
-        """Take down vectors: logically delete them from the index.
-
-        O(delete batch): one bucket-pruned idempotence anti-join + one
-        atomic append to the ``deleted`` registry. Effective immediately:
-        probes stop returning the vectors (as neighbors OR queries), a
-        redelivered deleted vector is never re-ingested, and the next
-        :meth:`retrain` / :meth:`purge_deleted` / epoch reassign drops the
-        rows physically. Deletion is terminal for an id (the registry is
-        the no-reingest memory — same role as the CDC table's op='D'
-        tombstones, operators/merge.py).
-
-        ``ids``: DataFrame carrying ``id_col``, or an iterable of ints.
-        Returns the number of ids newly recorded."""
-        if isinstance(ids, DataFrame):
-            want = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-        else:
-            want = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "id BIGINT"
-            ).distinct()
-        del_v = self.deleted.version
-        seq = int(self.deleted.properties.get("batch_seq", 0)) + 1
-        pruned = lake_buckets_of(want, self.deleted, "id")
-        already = self.deleted.read(buckets=pruned).select("id")
-        fresh = want.join(already, "id", "left_anti").localCheckpoint(eager=True)
-        n = fresh.count()
-        if n == 0:
-            return 0
-        self.deleted.commit_append(
-            fresh.select("id", F.lit(seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.deleted.bucket_expr("id")),
-            properties={"batch_seq": seq},
-            expected_version=del_v,
-        )
-        return n
-
-    def purge_deleted(self) -> dict[str, int]:
-        """Physically drop deleted ids' vector rows (CoW of only the
-        clusters that hold them). The locating scan reads just the
-        (id, cluster) columns of the corpus — a vector's cluster is not
-        derivable from its id, so a columnar scan is the honest cost of a
-        TARGETED purge (retrain purges for free as a full rewrite).
-        Idempotent and crash-safe without a recovery protocol: logical
-        reads are already masked and ``purged_seq`` (advanced last) only
-        skips work. ``ids`` rows are retained as no-reingest memory."""
-        self.recover()
-        del_seq = int(self.deleted.properties.get("batch_seq", 0))
-        purged = int(self.deleted.properties.get("purged_seq", 0))
-        out = {"purged_ids": 0, "vector_buckets_rewritten": 0}
-        if del_seq == purged:
-            return out
-        targets = (
-            self.deleted.read()
-            .filter(F.col("batch_seq") > F.lit(purged))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-        # pinned to the version the keep-set is read at: a concurrent
-        # append landing mid-purge aborts the purge instead of being
-        # silently erased by the stale bucket rewrite
-        vec_v = self.vectors.version
+    def _purge(self, targets: DataFrame) -> dict[str, int]:
+        """Drop taken-down ids' vector rows: CoW of only the clusters that
+        hold them. The locating scan reads just the (id, cluster) columns
+        of the corpus — a vector's cluster is not derivable from its id,
+        so a columnar scan is the honest cost of a TARGETED purge (retrain
+        purges for free as a full rewrite). ``ids`` rows are retained as
+        no-reingest memory."""
         hit = (
             self.vectors.read()
             .select("id", "cluster")
@@ -502,26 +361,10 @@ class IncrementalANN:
             .distinct()
         )
         clusters = sorted(int(r["cluster"]) for r in hit.collect())
-        if clusters:
-            keep = self.vectors.read(buckets=clusters).join(
-                targets, "id", "left_anti"
-            )
-            self.vectors.commit_rewrite(
-                keep.withColumn("bucket", F.col("cluster")),
-                touched_buckets=clusters,
-                expected_version=vec_v,
-            )
-            out.update(
-                purged_ids=targets.count(),
-                vector_buckets_rewritten=len(clusters),
-            )
-        self.deleted.commit_append(
-            self.spark.createDataFrame([], self.deleted.schema).withColumn(
-                "bucket", F.lit(0)
-            ),
-            properties={"purged_seq": del_seq},
-        )
-        return out
+        if not clusters:
+            return {}
+        self._rewrite_without(self.vectors, clusters, targets, F.col("cluster"))
+        return dict(purged_ids=targets.count(), vector_buckets_rewritten=len(clusters))
 
     # ---------------------------------------------------------------- query
 
@@ -651,16 +494,11 @@ class IncrementalANN:
         nc = self.n_centroids if n_centroids is None else int(n_centroids)
         if nc < 1:
             raise ValueError(f"n_centroids must be >= 1, got {nc}")
-        vec_v = self.vectors.version
         # takedowns are excluded from training AND physically dropped by
-        # the rewrite (retrain doubles as a full purge)
-        corpus = (
-            self.vectors.read()
-            .join(self.deleted.read().select("id"), "id", "left_anti")
-            .select("id", "v", "batch_seq")
-        )
+        # the reassign's full rewrite (retrain doubles as a full purge)
+        corpus = self._live(self.vectors.read()).select("id", "v")
         assign = ivf_refine_assign(
-            corpus.select("id", "v"), n_centroids=nc,
+            corpus, n_centroids=nc,
             id_col="id", vec_col="v", iters=iters,
         )
         # recover the refined centroid vectors: exact decimal means per
@@ -687,43 +525,4 @@ class IncrementalANN:
                         "n_centroids": nc},
             expected_version=self.cent.version,
         )
-        newassign = self._score_against_centroids(corpus.select("id", "v")).join(
-            corpus.select("id", "batch_seq"), "id"
-        )
-        self.vectors.commit_rewrite(
-            newassign.select(
-                "id", "v", "cluster", "cos_r", "batch_seq",
-                F.col("cluster").alias("bucket"),
-            ),
-            touched_buckets=list(range(nc)),
-            properties={"cent_epoch": epoch},
-            expected_version=vec_v,
-            num_buckets=nc,
-        )
-        self.n_centroids = nc
-
-    def maintain(self, max_files_per_bucket: int = 8, keep_snapshots: int = 10) -> dict:
-        """Background maintenance: heal any interrupted commit sequence
-        FIRST (compacting across a dangling batch would otherwise leave
-        the roll-forward to misread history), then compact per-batch
-        append files + expire superseded snapshots (same valve as
-        IncrementalDeduper.maintain). Pending takedowns are physically
-        purged before compaction."""
-        recovered = self.recover()
-        out: dict[str, Any] = {"recovered": recovered}
-        out.update(self.purge_deleted())
-        _, st = self.vectors.compact(min_files=max_files_per_bucket + 1)
-        expired = self.vectors.expire_snapshots(keep_last=keep_snapshots)
-        out.update(
-            buckets_compacted=st["buckets_compacted"],
-            files_in=st["files_in"],
-            files_out=st["files_out"],
-            files_expired=len(expired),
-        )
-        _, ist = self.ids.compact(min_files=max_files_per_bucket + 1)
-        iexp = self.ids.expire_snapshots(keep_last=keep_snapshots)
-        out.update(
-            ids_buckets_compacted=ist["buckets_compacted"],
-            ids_files_expired=len(iexp),
-        )
-        return out
+        self._reassign_all()

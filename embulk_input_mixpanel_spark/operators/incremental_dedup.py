@@ -6,12 +6,13 @@ entire design is incremental windows — export_service.rb:59-65), so dedup
 must be incremental too: per new batch, shingle/hash ONLY the new docs and
 join them against persisted state.
 
-State lives in append-only lake tables (sources/lake.py snapshots —
-atomic commits, time travel, bucket-pruned reads):
+State lives in lake tables chained by the shared store protocol
+(operators/store_kernel.py: commit order, any-lag roll-forward, the
+``deleted`` takedown registry, purge and maintain):
 
-- ``sigs``    (id, shs, mh_0..mh_{k-1}, batch_seq), bucketed by id —
-  the per-doc shingle set + MinHash signature, read back ONLY for docs
-  that appear in candidate pairs (bucket-pruned by id).
+- ``sigs``    (id, shs, mh_0..mh_{k-1}, batch_seq), bucketed by id — the
+  chain's leader: the per-doc shingle set + MinHash signature, read back
+  ONLY for docs that appear in candidate pairs (bucket-pruned by id).
 - ``buckets`` (band, bk, id, batch_seq), bucketed by (band, bk) —
   the LSH band index. A new batch's band keys join against it to find
   old->new candidates; reads prune to the lake buckets its keys hash
@@ -20,12 +21,11 @@ atomic commits, time travel, bucket-pruned reads):
   when ``max_shingle_docs`` is set): append-only per-batch document-
   frequency deltas, summed on read, pruned to the batch's shingle
   universe. The persistent belt against boilerplate shingles.
-- ``deleted`` (id, batch_seq), bucketed by id — the takedown registry
-  (license removal / PII): :meth:`delete` appends ids O(batch); every
-  read path masks them immediately; :meth:`purge_deleted` (run by
-  maintain) physically drops their rows via CoW of only the affected
-  buckets. Rows are kept forever — they double as the no-reingest
-  memory, the store-level analog of the CDC table's op='D' tombstones.
+
+``buckets`` and ``dfreq`` follow ``sigs``: band keys are pure functions of
+the stored mh columns and df deltas are pure functions of the stored
+shingle sets, so the kernel rebuilds either from ``sigs`` rows after a
+crash or a cap-enable upgrade.
 
 Cost model per batch (the 100 TB story): shingling/hashing is O(batch)
 (the expensive text explosion never re-touches old docs); the index join
@@ -33,18 +33,10 @@ is one hash join keyed (band, bk) against bucket-pruned index files; the
 exact rescore reads only candidate docs' signature rows. Appends are
 :meth:`LakeTable.commit_append` — new files only, never a copy-on-write
 of history, so commit cost is O(batch) regardless of corpus size.
-
-Crash consistency: ``sigs`` commits FIRST, then ``buckets``, then
-``dfreq`` (when enabled); all carry ``batch_seq``. If a crash lands
-between commits, the next ``add_batch`` (or ``maintain``) ROLLS
-FORWARD: band keys are pure functions of the stored mh columns and df
-deltas are pure functions of the stored shingle sets, so the dangling
-batch's rows are recomputed from its sigs rows, located by
-``filter(batch_seq == seq)`` (correct even across an intervening
-compaction). Redelivered batches are dropped by an id anti-join against
-``sigs`` (bucket-pruned), making ingestion idempotent; their original
-pair OUTPUT is recomputable via :meth:`redelivered_pairs`. Concurrent
-writers are rejected by the tables' optimistic version guard.
+Redelivered batches are dropped by an id anti-join against ``sigs``
+(bucket-pruned), making ingestion idempotent; their original pair
+OUTPUT is recomputable via :meth:`redelivered_pairs`. Concurrent writers
+are rejected by the tables' optimistic version guard.
 
 Two hot-key belts:
 
@@ -79,6 +71,7 @@ from pyspark.sql import types as T
 
 from ..sources.lake import LakeTable, lake_buckets_of
 from .dedup import _derived, _minhash_band_keys, _rebalance, base31, shingles
+from .store_kernel import Link, StoreKernel
 
 __all__ = ["IncrementalDeduper"]
 
@@ -125,24 +118,28 @@ _DFREQ_SCHEMA = T.StructType(
     ]
 )
 
-# takedown registry: ids whose docs are deleted from the store. Rows are
-# kept FOREVER (they double as the no-reingest memory); purged_seq in the
-# table properties tracks how far physical purging has caught up.
-_DELETED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("batch_seq", T.LongType()),
-    ]
-)
+
+def _df_deltas(sigs: DataFrame) -> DataFrame:
+    """Per-batch document-frequency deltas of signature rows' shingle
+    sets (the POST-cap sets, so the deltas are a pure function of
+    stored sigs)."""
+    return (
+        sigs.select(F.explode("shs").alias("sh"), "batch_seq")
+        .groupBy("sh", "batch_seq")
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
-class IncrementalDeduper:
+class IncrementalDeduper(StoreKernel):
     """Persistent MinHash-LSH dedup state + per-batch ingest.
 
     ``add_batch(docs)`` returns the NEW near-dup pairs this batch creates
     (new-new and old-new; old-old pairs were reported when their batch
     arrived) and commits the batch's signatures + band index.
     """
+
+    ID_COL = "doc_id"
+    PURGE_STATS = ("sig_buckets_rewritten", "index_buckets_rewritten")
 
     def __init__(
         self,
@@ -166,355 +163,114 @@ class IncrementalDeduper:
         self.portable = portable
         self.max_bucket_size = max_bucket_size
         self.max_shingle_docs = max_shingle_docs
-        sig_path = os.path.join(self.path, "sigs")
-        buck_path = os.path.join(self.path, "buckets")
-        df_path = os.path.join(self.path, "dfreq")
-        del_path = os.path.join(self.path, "deleted")
-        self.sigs = LakeTable(spark, sig_path)
-        self.buckets = LakeTable(spark, buck_path)
-        self.deleted = LakeTable(spark, del_path)
-        self.dfreq = LakeTable(spark, df_path) if max_shingle_docs is not None else None
-        if not self.sigs.exists():
-            self.sigs = LakeTable.create(
-                spark, sig_path, _sig_schema(k), num_buckets=num_buckets,
-                properties={"batch_seq": 0, "k": k, "n_bands": n_bands, "n": n,
-                            "portable": portable,
-                            # JSON null can't distinguish "uncapped" from
-                            # "pre-upgrade store": encode None as "none"
-                            "max_shingle_docs": max_shingle_docs
-                            if max_shingle_docs is not None else "none"},
+        # JSON null can't distinguish "uncapped" from "pre-upgrade store":
+        # encode None as "none"
+        cap = max_shingle_docs if max_shingle_docs is not None else "none"
+        self.sigs = self._open(
+            "sigs", _sig_schema(k), num_buckets, batch_seq=0, k=k,
+            n_bands=n_bands, n=n, portable=portable, max_shingle_docs=cap,
+        )
+        # a mismatched reopen would compute band keys / minhashes for new
+        # batches inconsistently with the persisted index — old-new
+        # candidates silently missed forever. Validate every parameter
+        # that shapes the stored signatures (properties a pre-upgrade store
+        # never wrote are skipped).
+        props = self.sigs.properties
+        upgrade = False
+        for name, mine in (
+            ("k", k), ("n_bands", n_bands), ("n", n), ("portable", portable),
+            ("max_shingle_docs", cap),
+        ):
+            stored = props.get(name)
+            if stored is None or stored == mine:
+                continue
+            if name == "max_shingle_docs" and stored == "none":
+                # ENABLING the cap on an uncapped store is a safe upgrade:
+                # recover()'s any-lag roll-forward backfills the fresh
+                # dfreq from all stored signature sets (the cap is a
+                # drifting belt by design — already-stored sigs
+                # legitimately keep their uncapped shingles). Disabling or
+                # CHANGING a cap stays an error: the cap is stamped below
+                # so later reopens validate against it.
+                upgrade = True
+                continue
+            raise ValueError(
+                f"store at {self.path} was created with {name}={stored}; "
+                f"reopening with {name}={mine} would desynchronize new "
+                "signatures from the persisted index"
             )
-        else:
-            # a mismatched reopen would compute band keys / minhashes for
-            # new batches inconsistently with the persisted index —
-            # old-new candidates silently missed forever. Validate every
-            # parameter that shapes the stored signatures (properties a
-            # pre-upgrade store never wrote are skipped).
-            props = self.sigs.properties
-            mine_cap = max_shingle_docs if max_shingle_docs is not None else "none"
-            for name, mine in (
-                ("k", k), ("n_bands", n_bands), ("n", n), ("portable", portable),
-                ("max_shingle_docs", mine_cap),
-            ):
-                stored = props.get(name)
-                if stored is not None and stored != mine:
-                    if name == "max_shingle_docs" and stored == "none" and (
-                        max_shingle_docs is not None
-                    ):
-                        # ENABLING the cap on an uncapped store is a safe
-                        # upgrade: recover()'s tolerant roll-forward
-                        # backfills dfreq from all stored signature sets
-                        # (the cap is a drifting belt by design — already-
-                        # stored sigs legitimately keep their uncapped
-                        # shingles). Disabling or CHANGING a cap stays an
-                        # error: the stored value below is re-stamped so
-                        # later reopens validate against the new cap.
-                        continue
-                    raise ValueError(
-                        f"store at {self.path} was created with {name}={stored}; "
-                        f"reopening with {name}={mine} would desynchronize new "
-                        "signatures from the persisted index"
-                    )
-        if not self.buckets.exists():
-            self.buckets = LakeTable.create(
-                spark, buck_path, _BUCKET_SCHEMA, num_buckets=num_buckets,
-                properties={"batch_seq": 0},
-            )
-        if not self.deleted.exists():
-            # same num_buckets as sigs ON PURPOSE: a batch's id-bucket
-            # list prunes BOTH tables, so the takedown mask adds zero
-            # extra driver jobs to the hot ingest path
-            self.deleted = LakeTable.create(
-                spark, del_path, _DELETED_SCHEMA,
-                num_buckets=self.sigs.num_buckets,
-                properties={"batch_seq": 0, "purged_seq": 0},
-            )
-        if self.dfreq is not None and not self.dfreq.exists():
-            self.dfreq = LakeTable.create(
-                spark, df_path, _DFREQ_SCHEMA, num_buckets=num_buckets,
-                properties={"batch_seq": 0},
-            )
-            if int(self.sigs.properties.get("batch_seq", 0)) > 0:
-                # cap enabled on a pre-existing store (upgrade): stamp the
-                # cap into sigs properties so later reopens validate
-                # against it (a rows-free append is a properties-only
-                # commit). The df backfill itself is recover()'s tolerant
-                # roll-forward — it runs before the next batch touches
-                # dfreq and is crash-safe because the deltas are a pure
-                # function of the stored sigs.
-                self.sigs.commit_append(
-                    spark.createDataFrame([], self.sigs.schema).withColumn(
-                        "bucket", F.lit(0)
-                    ),
-                    properties={
-                        "max_shingle_docs": max_shingle_docs
-                        if max_shingle_docs is not None else "none"
-                    },
-                )
+        self.buckets = self._open("buckets", _BUCKET_SCHEMA, num_buckets, batch_seq=0)
+        self._open_registry()
+        self.dfreq = None
+        if max_shingle_docs is not None:
+            self.dfreq = self._open("dfreq", _DFREQ_SCHEMA, num_buckets, batch_seq=0)
+        if upgrade:
+            self.sigs.commit_properties({"max_shingle_docs": max_shingle_docs})
 
     # ------------------------------------------------------------ internals
 
-    def _band_index_rows(self, sig_df: DataFrame, batch_seq) -> DataFrame:
+    def _chain(self) -> list[Link]:
+        chain: list[Link] = [
+            ("sigs_", self.sigs, None),
+            ("buckets_", self.buckets, lambda rows: self._band_index_rows(rows).withColumn(
+                "bucket", self.buckets.bucket_expr("band", "bk"))),
+        ]
+        if self.dfreq is not None:
+            chain.append(("dfreq_", self.dfreq, lambda rows: _df_deltas(rows).withColumn(
+                "bucket", self.dfreq.bucket_expr("sh"))))
+        return chain
+
+    def _id_table(self) -> LakeTable:
+        return self.sigs
+
+    def _band_index_rows(self, sig_df: DataFrame) -> DataFrame:
+        """(id, mh_*, batch_seq) -> band index rows (band, bk, id, batch_seq)."""
         keys = _minhash_band_keys(self.k, self.n_bands)
-        return sig_df.select(
-            F.posexplode(keys).alias("band", "bk"),
-            F.col("id"),
-            F.lit(batch_seq).cast("long").alias("batch_seq"),
-        )
+        return sig_df.select(F.posexplode(keys).alias("band", "bk"), "id", "batch_seq")
 
-    def recover(self) -> bool:
-        """Roll forward a crash between the sigs and buckets commits.
-
-        Returns True if recovery ran. The dangling batch's index rows are
-        recomputed from the mh columns of its sigs rows, found by
-        ``filter(batch_seq == sig_seq)`` rather than a snapshot file-diff:
-        the filter stays correct even if a compaction committed between
-        the crash and the recovery (compaction preserves rows but
-        invalidates the latest commit's file-diff as a batch identifier —
-        recovering from the diff would both miss the dangling docs and
-        re-append compacted rows). Appends write per-batch files, so the
-        batch_seq predicate prunes untouched files via parquet row-group
-        stats on the rare runs this path executes at all."""
-        ran = False
-        sig_seq = int(self.sigs.properties.get("batch_seq", 0))
-        buck_seq = int(self.buckets.properties.get("batch_seq", 0))
-        if sig_seq != buck_seq:
-            if sig_seq != buck_seq + 1:
-                raise RuntimeError(
-                    f"dedup store corrupt: sigs at batch {sig_seq}, band index at "
-                    f"{buck_seq} — more than one dangling batch should be impossible"
-                )
-            dangling = self.sigs.read().filter(
-                F.col("batch_seq") == F.lit(sig_seq)
-            ).drop("batch_seq")
-            rows = self._band_index_rows(dangling, sig_seq)
-            self.buckets.commit_append(
-                rows.withColumn("bucket", self.buckets.bucket_expr("band", "bk")),
-                properties={"batch_seq": sig_seq},
-                expected_version=self.buckets.version,
-            )
-            ran = True
-        if self.dfreq is not None:
-            df_seq = int(self.dfreq.properties.get("batch_seq", 0))
-            if df_seq != sig_seq:
-                if df_seq > sig_seq:
-                    raise RuntimeError(
-                        f"dedup store corrupt: sigs at batch {sig_seq}, dfreq at "
-                        f"{df_seq} — the df table can never run ahead of sigs"
-                    )
-                # tolerate ANY lag, not just the single-batch crash
-                # window: lag 1 is the normal die-between-commits case;
-                # lag > 1 is the cap-enable UPGRADE path — a pre-upgrade
-                # store (ingested without max_shingle_docs) reopened with
-                # the cap gets a fresh dfreq at batch_seq=0, and this
-                # roll-forward backfills it from ALL stored signature
-                # sets. Deltas are a pure function of the stored POST-cap
-                # sets either way (pre-upgrade sigs were computed
-                # uncapped, so the backfilled df correctly counts the
-                # boilerplate shingles those docs kept); readers only SUM
-                # cnt per sh, so one combined delta stamped sig_seq is
-                # exactly equivalent to the per-batch deltas it replaces.
-                delta = (
-                    self.sigs.read()
-                    .filter(F.col("batch_seq") > F.lit(df_seq))
-                    .select(F.explode("shs").alias("sh"))
-                    .groupBy("sh")
-                    .agg(F.count("*").alias("cnt"))
-                    .withColumn("batch_seq", F.lit(sig_seq).cast("long"))
-                )
-                self.dfreq.commit_append(
-                    delta.withColumn("bucket", self.dfreq.bucket_expr("sh")),
-                    properties={"batch_seq": sig_seq},
-                    expected_version=self.dfreq.version,
-                )
-                ran = True
-        return ran
-
-    def _lake_buckets_of(self, df: DataFrame, table: LakeTable, *cols: str) -> list[int]:
-        """Distinct lake-bucket ids the given key columns hash into —
-        a driver collect of at most ``num_buckets`` integers, used to
-        prune store reads to the files the batch can possibly match."""
-        return lake_buckets_of(df, table, *cols)
-
-    def maintain(
-        self, max_files_per_bucket: int = 8, keep_snapshots: int = 10
-    ) -> dict[str, int]:
-        """Background maintenance: compact buckets that accumulated too
-        many per-batch append files, then expire superseded snapshots.
-
-        add_batch appends >=1 file per lake bucket per batch, so after B
-        batches a band-key read opens O(B) files per pruned bucket;
-        compaction restores O(1). Pure physical rewrite — pair output is
-        unaffected (tests pin parity) — and safe beside a live writer
-        (LakeTable.compact skips buckets that change under it).
-
-        Any dangling batch is rolled forward FIRST: compacting across a
-        crash window would otherwise commit a new sigs snapshot while the
-        band index still lacks the dangling batch's rows — and the
-        recovery must run before maintenance mutates the store it reads.
-        Pending takedowns are then physically purged (see
-        :meth:`purge_deleted`) before compaction, so the compacted files
-        no longer carry deleted docs' rows."""
-        out: dict[str, int] = {"recovered": int(self.recover())}
-        out.update(self.purge_deleted())
-        tables = [("sigs", self.sigs), ("buckets", self.buckets)]
-        if self.dfreq is not None:
-            tables.append(("dfreq", self.dfreq))
-        for name, table in tables:
-            _, st = table.compact(min_files=max_files_per_bucket + 1)
-            expired = table.expire_snapshots(keep_last=keep_snapshots)
-            out[f"{name}_buckets_compacted"] = st["buckets_compacted"]
-            out[f"{name}_files_in"] = st["files_in"]
-            out[f"{name}_files_out"] = st["files_out"]
-            out[f"{name}_files_expired"] = len(expired)
-        return out
-
-    # ------------------------------------------------------------- takedown
-
-    def delete(self, ids, id_col: str = "doc_id") -> int:
-        """Take down documents: logically delete them from the store.
-
-        O(delete batch): one bucket-pruned idempotence anti-join + one
-        atomic append to the ``deleted`` registry — never a rewrite of
-        corpus state on the takedown path (the physical drop is
-        :meth:`purge_deleted`, a maintenance operation). Effective
-        immediately on every read path: deleted docs stop appearing in
-        new pairs (add_batch) and re-derived pairs (redelivered_pairs),
-        and a redelivered deleted doc is NOT re-ingested (deletion is
-        terminal for an id — the registry doubles as the no-reingest
-        memory, mirroring how the CDC table's op='D' tombstones keep
-        out-of-order deletes effective, operators/merge.py).
-
-        ``ids``: a DataFrame carrying ``id_col``, or an iterable of ints.
-        Returns the number of ids newly recorded (already-deleted and
-        never-ingested ids are accepted and deduped — deleting ahead of
-        delivery blocks the doc from ever entering the store)."""
-        if isinstance(ids, DataFrame):
-            want = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-        else:
-            want = self.spark.createDataFrame(
-                [(int(i),) for i in ids], "id BIGINT"
-            ).distinct()
-        del_v = self.deleted.version
-        seq = int(self.deleted.properties.get("batch_seq", 0)) + 1
-        pruned = self._lake_buckets_of(want, self.deleted, "id")
-        already = self.deleted.read(buckets=pruned).select("id")
-        fresh = want.join(already, "id", "left_anti").localCheckpoint(eager=True)
-        n = fresh.count()
-        if n == 0:
-            return 0
-        self.deleted.commit_append(
-            fresh.select("id", F.lit(seq).cast("long").alias("batch_seq"))
-            .withColumn("bucket", self.deleted.bucket_expr("id")),
-            properties={"batch_seq": seq},
-            expected_version=del_v,
-        )
-        return n
-
-    def purge_deleted(self) -> dict[str, int]:
-        """Physically drop deleted docs' rows from ``sigs`` and the band
-        index (logical deletion already happened at :meth:`delete`; this
-        reclaims space, restores band-bucket occupancy for the size cap,
-        and keeps the mask anti-joins cheap). Run from :meth:`maintain`.
-
-        Copy-on-write of ONLY the affected lake buckets; `deleted` rows
-        are retained (no-reingest memory) and negative df deltas are
-        appended so the persistent df-cap stops counting purged docs.
-        Idempotent and crash-safe WITHOUT a recovery protocol: logical
-        reads are already masked, every step is a pure function of
-        durable state, and the ``purged_seq`` watermark (advanced last)
-        only skips work, never changes results. Band-index rows are
-        located from the sigs mh columns, so the index purge runs BEFORE
-        the sigs purge; a crash in between leaves dangling index rows
-        that the NEXT purge cannot locate — they are harmless (masked
-        candidates die at the rescore join) and vanish at the next
-        bucket-cap-triggering rewrite or store rebuild."""
-        self.recover()
-        del_seq = int(self.deleted.properties.get("batch_seq", 0))
-        purged = int(self.deleted.properties.get("purged_seq", 0))
-        out = {"purged_ids": 0, "sig_buckets_rewritten": 0,
-               "index_buckets_rewritten": 0}
-        if del_seq == purged:
-            return out
-        targets = (
-            self.deleted.read()
-            .filter(F.col("batch_seq") > F.lit(purged))
-            .select("id")
+    def _purge(self, targets: DataFrame) -> dict[str, int]:
+        """Copy-on-write of ONLY the affected lake buckets of the band
+        index, then ``sigs``, then negative df deltas so the persistent
+        df-cap stops counting purged docs. Band-index rows are located
+        from the sigs mh columns, so the index purge runs BEFORE the sigs
+        purge; a crash in between leaves dangling index rows that the NEXT
+        purge cannot locate — they are harmless (masked candidates die at
+        the rescore join) and vanish at the next bucket-cap-triggering
+        rewrite or store rebuild."""
+        n = targets.count()
+        if not n:
+            return {}
+        sig_buckets = lake_buckets_of(targets, self.sigs, "id")
+        dsigs = (
+            self.sigs.read(buckets=sig_buckets)
+            .join(targets, "id", "left_semi")
             .localCheckpoint(eager=True)
         )
-        n = targets.count()
-        if n:
-            # each rewrite is pinned to the version its keep-set was read
-            # at: a concurrent add_batch append landing in between aborts
-            # the purge (ConcurrentCommitError — rerun later) instead of
-            # being silently erased by the stale full-bucket rewrite (the
-            # same loss mode ADVICE r4 flagged for ANN's reassign)
-            buck_v = self.buckets.version
-            sig_buckets = self._lake_buckets_of(targets, self.sigs, "id")
-            dsigs = (
-                self.sigs.read(buckets=sig_buckets)
-                .join(targets, "id", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            # 1) band index (needs the sigs mh columns, so it goes first)
-            keys = self._band_index_rows(dsigs.drop("batch_seq"), 0).select("band", "bk")
-            idx_buckets = self._lake_buckets_of(keys, self.buckets, "band", "bk")
-            if idx_buckets:
-                keep = self.buckets.read(buckets=idx_buckets).join(
-                    targets, "id", "left_anti"
-                )
-                self.buckets.commit_rewrite(
-                    keep.withColumn(
-                        "bucket", self.buckets.bucket_expr("band", "bk")
-                    ),
-                    touched_buckets=idx_buckets,
-                    expected_version=buck_v,
-                )
-            # 2) sigs (after this, a crash-rerun finds no dsigs rows, so
-            #    step 3 can never double-subtract)
-            if sig_buckets:
-                sig_v = self.sigs.version
-                keep = self.sigs.read(buckets=sig_buckets).join(
-                    targets, "id", "left_anti"
-                )
-                self.sigs.commit_rewrite(
-                    keep.withColumn("bucket", self.sigs.bucket_expr("id")),
-                    touched_buckets=sig_buckets,
-                    expected_version=sig_v,
-                )
-            # 3) negative df deltas from the purged docs' post-cap sets
-            #    (dsigs was checkpointed BEFORE the sigs rewrite). A crash
-            #    between step 2 and here under-subtracts — the df then
-            #    overcounts, which only makes the cap belt more
-            #    conservative; the reverse order could double-subtract and
-            #    resurrect boilerplate, which loses recall.
-            if self.dfreq is not None:
-                neg = (
-                    dsigs.select(F.explode("shs").alias("sh"))
-                    .groupBy("sh")
-                    .agg((-F.count("*")).alias("cnt"))
-                    .withColumn(
-                        "batch_seq",
-                        F.lit(int(self.dfreq.properties.get("batch_seq", 0))).cast("long"),
-                    )
-                )
-                self.dfreq.commit_append(
-                    neg.withColumn("bucket", self.dfreq.bucket_expr("sh")),
-                )
-            out.update(
-                purged_ids=n,
-                sig_buckets_rewritten=len(sig_buckets),
-                index_buckets_rewritten=len(idx_buckets),
-            )
-        # advance the watermark LAST (a crash before this line re-runs the
-        # purge, which is a no-op over already-purged rows)
-        self.deleted.commit_append(
-            self.spark.createDataFrame([], self.deleted.schema).withColumn(
-                "bucket", F.lit(0)
-            ),
-            properties={"purged_seq": del_seq},
+        # 1) band index (needs the sigs mh columns, so it goes first)
+        keys = self._band_index_rows(dsigs).select("band", "bk")
+        idx_buckets = lake_buckets_of(keys, self.buckets, "band", "bk")
+        self._rewrite_without(
+            self.buckets, idx_buckets, targets, self.buckets.bucket_expr("band", "bk")
         )
-        return out
+        # 2) sigs (after this, a crash-rerun finds no dsigs rows, so step
+        #    3 can never double-subtract)
+        self._rewrite_without(self.sigs, sig_buckets, targets, self.sigs.bucket_expr("id"))
+        # 3) negative df deltas from the purged docs' post-cap sets (dsigs
+        #    was checkpointed BEFORE the sigs rewrite). A crash between
+        #    step 2 and here under-subtracts — the df then overcounts,
+        #    which only makes the cap belt more conservative; the reverse
+        #    order could double-subtract and resurrect boilerplate, which
+        #    loses recall.
+        if self.dfreq is not None:
+            self.dfreq.commit_append(
+                _df_deltas(dsigs).withColumn("cnt", -F.col("cnt"))
+                .withColumn("bucket", self.dfreq.bucket_expr("sh"))
+            )
+        return dict(
+            purged_ids=n,
+            sig_buckets_rewritten=len(sig_buckets),
+            index_buckets_rewritten=len(idx_buckets),
+        )
 
     # ----------------------------------------------------------- redelivery
 
@@ -551,18 +307,13 @@ class IncrementalDeduper:
         the union of those batches' pairs touching the given docs."""
         empty = self.spark.createDataFrame([], PAIR_SCHEMA)
         ids = docs.select(F.col(id_col).cast("long").alias("id")).distinct()
-        id_lake_buckets = self._lake_buckets_of(ids, self.sigs, "id")
-        mine = (
-            self.sigs.read(buckets=id_lake_buckets)
-            .join(ids, "id", "left_semi")
-            # takedown mask: a deleted doc's original pairs are not
-            # re-derivable (its content is logically gone)
-            .join(
-                self.deleted.read(buckets=id_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
+        id_lake_buckets = lake_buckets_of(ids, self.sigs, "id")
+        # takedown mask: a deleted doc's original pairs are not
+        # re-derivable (its content is logically gone)
+        mine = self._live(
+            self.sigs.read(buckets=id_lake_buckets).join(ids, "id", "left_semi"),
+            id_lake_buckets,
+        ).localCheckpoint(eager=True)
         seqs = sorted(
             int(r["batch_seq"]) for r in mine.select("batch_seq").distinct().collect()
         )
@@ -572,8 +323,8 @@ class IncrementalDeduper:
         # band keys from the stored mh columns -> candidate ids from the
         # stored index (includes the batch itself: it's stored now, so
         # new-new and old-new candidates both fall out of one expansion)
-        nb = self._band_index_rows(mine.drop("batch_seq"), 0).select("band", "bk")
-        key_lake_buckets = self._lake_buckets_of(nb, self.buckets, "band", "bk")
+        nb = self._band_index_rows(mine).select("band", "bk")
+        key_lake_buckets = lake_buckets_of(nb, self.buckets, "band", "bk")
         key_set = nb.distinct()
         stored = (
             self.buckets.read(buckets=key_lake_buckets)
@@ -599,16 +350,11 @@ class IncrementalDeduper:
         cids = cand.select(F.col("id_a").alias("id")).unionByName(
             cand.select(F.col("id_b").alias("id"))
         ).distinct()
-        cand_lake_buckets = self._lake_buckets_of(cids, self.sigs, "id")
-        csigs = (
-            self.sigs.read(buckets=cand_lake_buckets)
-            .join(cids, "id", "left_semi")
-            .join(
-                self.deleted.read(buckets=cand_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .select("id", "shs", "batch_seq")
-        )
+        cand_lake_buckets = lake_buckets_of(cids, self.sigs, "id")
+        csigs = self._live(
+            self.sigs.read(buckets=cand_lake_buckets).join(cids, "id", "left_semi"),
+            cand_lake_buckets,
+        ).select("id", "shs", "batch_seq")
         a = csigs.select(
             F.col("id").alias("id_a"), F.col("shs").alias("shs_a"),
             F.col("batch_seq").alias("seq_a"),
@@ -651,18 +397,10 @@ class IncrementalDeduper:
         t0 = time.monotonic()
         ran_recovery = self.recover()
         batch_seq = int(self.sigs.properties.get("batch_seq", 0)) + 1
-        sig_v, buck_v = self.sigs.version, self.buckets.version
-        df_v = self.dfreq.version if self.dfreq is not None else None
+        pins = self._pins()
 
-        ids = docs.select(F.col(id_col).cast("long").alias("id"))
-        id_lake_buckets = self._lake_buckets_of(ids, self.sigs, "id")
-        # known = stored ids UNION deleted ids (deleted shares sigs'
-        # num_buckets, so the same pruned bucket list serves both reads
-        # and the takedown mask costs zero extra driver jobs); a
-        # redelivered DELETED doc must never re-enter the store
-        known = self.sigs.read(buckets=id_lake_buckets).select("id").unionByName(
-            self.deleted.read(buckets=id_lake_buckets).select("id")
-        )
+        # a redelivered (or DELETED) doc must never re-enter the store
+        known, _ = self._known_ids(docs.select(F.col(id_col).cast("long").alias("id")))
         fresh = (
             _rebalance(docs)
             .select(F.col(id_col).cast("long").alias(id_col), F.col(text_col))
@@ -703,11 +441,12 @@ class IncrementalDeduper:
             F.collect_set(F.xxhash64("shingle")).alias("shs"),
             *[F.min(h).alias(f"mh_{i}") for i, h in enumerate(hs)],
         ).localCheckpoint(eager=True)
+        rows = perdoc.withColumn("batch_seq", F.lit(batch_seq).cast("long"))
         t_sig = time.monotonic()
 
         # band keys of the batch; ONE fused driver job computes n_new AND
         # the band-key lake-bucket set (formerly a count + a collect)
-        newb = self._band_index_rows(perdoc, batch_seq)
+        newb = self._band_index_rows(rows)
         fused = newb.agg(
             F.countDistinct("id").alias("n"),
             F.collect_set(self.buckets.bucket_expr("band", "bk")).alias("bks"),
@@ -774,21 +513,16 @@ class IncrementalDeduper:
         old_ids = cand.select(F.col("id_a").alias("id")).unionByName(
             cand.select(F.col("id_b").alias("id"))
         ).join(perdoc.select("id"), "id", "left_anti").distinct()
-        old_lake_buckets = self._lake_buckets_of(old_ids, self.sigs, "id")
+        old_lake_buckets = lake_buckets_of(old_ids, self.sigs, "id")
         t_cand = time.monotonic()
         # anti-join the takedown registry (pruned by the same candidate
         # buckets): a not-yet-purged deleted doc still has sig rows, and
         # pairs against it must not be emitted — without its sig row the
         # candidate dies at the inner rescore join below
-        old_sigs = (
-            self.sigs.read(buckets=old_lake_buckets)
-            .join(old_ids, "id", "left_semi")
-            .join(
-                self.deleted.read(buckets=old_lake_buckets).select("id"),
-                "id", "left_anti",
-            )
-            .select("id", "shs")
-        )
+        old_sigs = self._live(
+            self.sigs.read(buckets=old_lake_buckets).join(old_ids, "id", "left_semi"),
+            old_lake_buckets,
+        ).select("id", "shs")
         allsigs = perdoc.select("id", "shs").unionByName(old_sigs)
         a = allsigs.select(F.col("id").alias("id_a"), F.col("shs").alias("shs_a"))
         b = allsigs.select(F.col("id").alias("id_b"), F.col("shs").alias("shs_b"))
@@ -808,34 +542,9 @@ class IncrementalDeduper:
         )
         t_rescore = time.monotonic()
 
-        # two-phase append: sigs first, buckets second (recover() rolls
-        # the index forward if we die in between)
-        self.sigs.commit_append(
-            perdoc.withColumn("batch_seq", F.lit(batch_seq).cast("long"))
-            .withColumn("bucket", self.sigs.bucket_expr("id")),
-            properties={"batch_seq": batch_seq},
-            expected_version=sig_v,
-        )
-        self.buckets.commit_append(
-            newb.withColumn("bucket", self.buckets.bucket_expr("band", "bk")),
-            properties={"batch_seq": batch_seq},
-            expected_version=buck_v,  # captured after recover(), so exact
-        )
-        if self.dfreq is not None:
-            # third phase of the append sequence; deltas recomputed from
-            # perdoc.shs (the POST-cap sets — identical to what recover()
-            # would rebuild from the committed sigs rows)
-            delta = (
-                perdoc.select(F.explode("shs").alias("sh"))
-                .groupBy("sh")
-                .agg(F.count("*").alias("cnt"))
-                .withColumn("batch_seq", F.lit(batch_seq).cast("long"))
-            )
-            self.dfreq.commit_append(
-                delta.withColumn("bucket", self.dfreq.bucket_expr("sh")),
-                properties={"batch_seq": batch_seq},
-                expected_version=df_v,
-            )
+        # sigs first, then the band index and df deltas derived from the
+        # same rows (recover() rolls them forward if we die in between)
+        self._append_batch(rows.withColumn("bucket", self.sigs.bucket_expr("id")), batch_seq, pins)
         t_commit = time.monotonic()
 
         if stats is not None:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _rebalance
+
 __all__ = [
     "cosine",
     "brute_force_topk",
@@ -34,16 +36,6 @@ __all__ = [
 def _to_double(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
-
-
-def _rebalance(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before fold-heavy vector work (a small corpus
-    file often scans as 1 partition, serializing the per-row dot-product
-    folds). No-op at real scale; see operators/dedup.py::_rebalance."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _dot(a: Column, b: Column) -> Column:
