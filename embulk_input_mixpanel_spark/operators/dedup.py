@@ -257,6 +257,17 @@ def _token_array(text_col: str | Column) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def _runs_jobs(plan) -> bool:
+    """True if building the RDD of physical ``plan`` would run Spark jobs:
+    an adaptive plan materializes its exchanges, a broadcast or subquery
+    runs when prepared."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan" or "Exchange" in name or not plan.subqueries().isEmpty():
+        return True
+    kids = plan.children()
+    return any(_runs_jobs(kids.apply(i)) for i in range(kids.size()))
+
+
 def _rebalance(df: DataFrame) -> DataFrame:
     """Widen narrow inputs before explosion- or fold-heavy work.
 
@@ -266,15 +277,24 @@ def _rebalance(df: DataFrame) -> DataFrame:
     round-robin shuffle of the (small) input unlocks full parallelism for
     the expensive downstream expansion. No-op when the scan is already at
     least as wide as the default parallelism (the 100 TB case).
+
+    Never launches a job. The partition count is read only off an
+    exchange-free plan; a frame with an exchange below it is returned as
+    is, already as wide as its shuffle made it (under AQE, ``.rdd`` on it
+    would execute every exchange only to count partitions). So rebalance
+    a batch on its scan, before any join.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
+    if _runs_jobs(df._jdf.queryExecution().executedPlan()):
+        return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
 def _raw_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """Word n-gram shingle explosion (with per-doc repeats): (id, shingle).
+    """Word n-gram shingle explosion (with per-doc repeats): (id, shingle),
+    over ``df`` as partitioned (callers :func:`_rebalance` a narrow scan).
 
     Built as transform over index range -> concat_ws of n consecutive
     tokens; explode. All codegen. Two load-bearing plan details:
@@ -286,9 +306,7 @@ def _raw_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
       pipeline so it runs ONCE (posting-list round-trip with
       shuffle-stage reuse), never once per join side.
     """
-    step = _rebalance(df).select(
-        F.col(id_col).alias("id"), _token_array(text_col).alias("_toks")
-    )
+    step = df.select(F.col(id_col).alias("id"), _token_array(text_col).alias("_toks"))
     tc = F.col("_toks")
     idx = F.sequence(F.lit(0), F.greatest(F.size(tc) - n, F.lit(-1)))
     sh = F.transform(
@@ -314,7 +332,7 @@ def shingle_postings(
     its shuffle map stage across the branches.
     """
     posting = (
-        _raw_shingles(df, text_col, id_col, n)
+        _raw_shingles(_rebalance(df), text_col, id_col, n)
         .groupBy("shingle")
         .agg(F.collect_set("id").alias("ids"))
     )
@@ -337,7 +355,7 @@ def shingles(
     rides the posting-list aggregation (:func:`shingle_postings`).
     """
     if max_shingle_docs is None:
-        return _raw_shingles(df, text_col, id_col, n).distinct()
+        return _raw_shingles(_rebalance(df), text_col, id_col, n).distinct()
     return shingle_postings(df, text_col, id_col, n, max_shingle_docs).select(
         F.explode("ids").alias("id"), "shingle"
     )

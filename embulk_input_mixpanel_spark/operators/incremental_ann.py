@@ -288,9 +288,12 @@ class IncrementalANN(StoreKernel):
         )
         # idempotence: drop redelivered (or DELETED) ids via the id-bucketed
         # index — the scan opens only the lake buckets the BATCH's ids hash
-        # into, never the whole corpus' id files
+        # into, never the whole corpus' id files (bucketed off the batch's
+        # own scan: the rebalance shuffle is for the scoring below)
         ids_snap = self.ids.snapshot()
-        known, batch_id_buckets = self._known_ids(vecs)
+        known, batch_id_buckets = self._known_ids(
+            batch.select(F.col(id_col).cast("long").alias("id"))
+        )
         vecs = vecs.join(known, "id", "left_anti").localCheckpoint(eager=True)
         n = vecs.count()
         if stats is not None:
@@ -404,7 +407,9 @@ class IncrementalANN(StoreKernel):
             )
         # takedown mask: deleted vectors neither serve as queries nor
         # appear as neighbors (pre-purge their rows still exist in
-        # `vectors`; the registry is small, AQE broadcasts the anti-join)
+        # `vectors`). An empty registry reads as an empty relation, so the
+        # optimizer drops both anti-joins; a small non-empty one is a
+        # parquet scan with size statistics, broadcast by the planner
         gone = self.deleted.read().select("id")
         q = q.join(gone.withColumnRenamed("id", "query_id"), "query_id", "left_anti")
         # |q| rows; referenced by both the probe subtree and the rescore

@@ -69,8 +69,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.lake import LakeTable, lake_buckets_of
-from .dedup import _derived, _minhash_band_keys, _rebalance, base31, shingles
+from ..sources.lake import LakeTable, empty_frame, lake_buckets_of
+from .dedup import _derived, _minhash_band_keys, _raw_shingles, _rebalance, base31
 from .store_kernel import Link, StoreKernel
 
 __all__ = ["IncrementalDeduper"]
@@ -305,7 +305,7 @@ class IncrementalDeduper(StoreKernel):
         pairs). Intended for exact redelivery of a previously-ingested
         batch; a batch mixing docs from several original batches returns
         the union of those batches' pairs touching the given docs."""
-        empty = self.spark.createDataFrame([], PAIR_SCHEMA)
+        empty = empty_frame(self.spark, PAIR_SCHEMA)
         ids = docs.select(F.col(id_col).cast("long").alias("id")).distinct()
         id_lake_buckets = lake_buckets_of(ids, self.sigs, "id")
         # takedown mask: a deleted doc's original pairs are not
@@ -399,7 +399,9 @@ class IncrementalDeduper(StoreKernel):
         batch_seq = int(self.sigs.properties.get("batch_seq", 0)) + 1
         pins = self._pins()
 
-        # a redelivered (or DELETED) doc must never re-enter the store
+        # a redelivered (or DELETED) doc must never re-enter the store.
+        # The batch is widened ONCE, on its exchange-free scan; the
+        # explosion below runs on the anti-joined frame as it stands
         known, _ = self._known_ids(docs.select(F.col(id_col).cast("long").alias("id")))
         fresh = (
             _rebalance(docs)
@@ -409,7 +411,7 @@ class IncrementalDeduper(StoreKernel):
         t_prune = time.monotonic()
 
         # ONE explosion of the batch -> per-doc shingle set + signature
-        sh = shingles(fresh, text_col, id_col, self.n, max_shingle_docs=None)
+        sh = _raw_shingles(fresh, text_col, id_col, self.n).distinct()
         if self.dfreq is not None:
             # persistent df-cap: hot = shingles whose stored df (sum of
             # per-batch deltas, bucket-pruned to the BATCH's shingle
@@ -455,7 +457,7 @@ class IncrementalDeduper(StoreKernel):
         key_lake_buckets = sorted(int(b) for b in fused["bks"])
         t_keys = time.monotonic()
 
-        empty = self.spark.createDataFrame([], PAIR_SCHEMA)
+        empty = empty_frame(self.spark, PAIR_SCHEMA)
         if n_new == 0:
             if stats is not None:
                 stats.update(n_new=0, recovered=ran_recovery)

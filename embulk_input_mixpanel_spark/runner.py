@@ -23,7 +23,7 @@ from .plans.checkpoint import get_cursor
 from .plans.metrics import record_lineage
 from .plans.windows import BatchPlanner, ConfigError
 from .functions.retry import with_retry
-from .sources.lake import LakeTable
+from .sources.lake import LakeTable, empty_frame
 
 logger = logging.getLogger(__name__)
 
@@ -133,7 +133,7 @@ def preview(
     """
     cursor = get_cursor(table)
     if upper_bound <= cursor:
-        return table.spark.createDataFrame([], events.schema)
+        return empty_frame(table.spark, events.schema)
     planner = BatchPlanner(hwm=cursor, upper_bound=upper_bound, slice_size=slice_size)
     first = planner.batches[0]
     from pyspark.sql import functions as F

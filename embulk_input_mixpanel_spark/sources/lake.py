@@ -48,6 +48,7 @@ __all__ = [
     "LakeTable",
     "Snapshot",
     "bucket_of",
+    "empty_frame",
     "lake_buckets_of",
     "ConcurrentCommitError",
 ]
@@ -75,6 +76,21 @@ def bucket_of(num_buckets: int, *key_cols: str | Column) -> Column:
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return F.pmod(F.xxhash64(*cols), F.lit(num_buckets)).cast("int")
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` that the optimizer folds away.
+
+    ``PruneFilters`` turns the always-false filter into an empty
+    ``LocalRelation``, and ``PropagateEmptyRelation`` then drops the
+    anti-joins and unions it feeds at plan time: no task runs for it.
+    ``spark.createDataFrame([], schema)`` is a Python RDD instead, one
+    Python worker round-trip per default-parallelism task for zero rows,
+    and it has no size statistics, so a join against it is planned as a
+    sort-merge join. Columns come out nullable, as a parquet scan's do.
+    """
+    nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    return spark.range(1).select(*nulls).where(F.lit(False))
 
 
 def lake_buckets_of(df: DataFrame, table: "LakeTable", *key_cols: str) -> list[int]:
@@ -277,7 +293,7 @@ class LakeTable:
             files = [f for b, fl in snap.files.items() if b in want for f in fl]
         schema = snap.schema
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            df = empty_frame(self.spark, schema)
         else:
             paths = [os.path.join(self.path, f) for f in files]
             df = self.spark.read.schema(schema).parquet(*paths)

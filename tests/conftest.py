@@ -1,5 +1,6 @@
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -18,3 +19,23 @@ def tmp_table_dir():
     d = tempfile.mkdtemp(prefix="laketbl-")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (fn's result, number of Spark jobs fn launched),
+    counted under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store learns of jobs through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

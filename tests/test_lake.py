@@ -29,6 +29,31 @@ def test_create_read_empty(spark, tmp_table_dir):
     assert t.read().schema == SCHEMA
 
 
+def test_empty_reads_are_foldable_jvm_relations(spark, tmp_table_dir, jobs_of):
+    """An empty table and empty buckets of a filled one read as a relation
+    the optimizer folds: the table schema, zero rows, and no Spark job
+    (no Python worker per task, no anti-join left to plan)."""
+    schema = T.StructType([*SCHEMA.fields, T.StructField("op", T.StringType())])
+    t = LakeTable.create(spark, tmp_table_dir, schema, num_buckets=8)
+
+    def check(read):
+        for tomb in (False, True):
+            df = read(include_tombstones=tomb)
+            assert df.schema == schema
+            assert jobs_of(df.collect) == ([], 0)
+            # an anti-join against it (the takedown mask's shape) is
+            # planned away: one job, for the left side alone
+            live = spark.range(3).withColumnRenamed("id", "v").join(df.select("v"), "v", "left_anti")
+            assert jobs_of(lambda: len(live.collect())) == (3, 1)
+
+    check(t.read)
+    rows = _with_bucket(spark.createDataFrame([("r1", "a", 1, "U"), ("r2", "b", 2, "D")], schema), 8)
+    filled = sorted(r[0] for r in rows.select("bucket").distinct().collect())
+    t.commit_rewrite(rows, filled)
+    vacant = [b for b in range(8) if b not in filled]
+    check(lambda **kw: t.read(buckets=vacant, **kw))
+
+
 def test_commit_and_time_travel(spark, tmp_table_dir):
     t = LakeTable.create(spark, tmp_table_dir, SCHEMA, num_buckets=4)
     df1 = _with_bucket(spark.createDataFrame([("r1", "a", 1), ("r2", "b", 1)], SCHEMA), 4)

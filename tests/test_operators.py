@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from embulk_input_mixpanel_spark.operators.dedup import (
+    _rebalance,
     connected_components,
     dedup_exact,
     dedup_keep_best,
@@ -38,6 +39,20 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(DOCS, ["doc_id", "text"])
+
+
+def test_rebalance_never_launches_a_job(spark, jobs_of):
+    """_rebalance widens a narrow scan and leaves a wide one alone; a frame
+    with a shuffle below it is returned as is, never executed to count its
+    partitions."""
+    width = spark.sparkContext.defaultParallelism
+    narrow = spark.range(0, 100, numPartitions=1)
+    wide = spark.range(0, 100, numPartitions=width)
+    shuffled = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    widened, jobs = jobs_of(lambda: _rebalance(narrow))
+    assert jobs == 0 and widened is not narrow
+    assert jobs_of(lambda: _rebalance(wide)) == (wide, 0)
+    assert jobs_of(lambda: _rebalance(shuffled)) == (shuffled, 0)
 
 
 def test_dedup_exact_groups(spark, docs):
